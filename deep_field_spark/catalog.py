@@ -204,15 +204,3 @@ def read_json(spark: SparkSession, path: str, schema: str | None = None) -> Data
     if schema is not None:
         reader = reader.schema(schema)
     return reader.json(path)
-
-
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: table(spark, sf_dir, name) for name in TABLES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Register every table as a temp view (for spark.sql queries)."""
-    dfs = load_all(spark, sf_dir)
-    for name, df in dfs.items():
-        df.createOrReplaceTempView(name)
-    return dfs

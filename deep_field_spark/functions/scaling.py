@@ -271,28 +271,20 @@ def n_state_buckets(n: int) -> int:
     )
 
 
-# --- corpus-count memo --------------------------------------------------
-# The derivation needs ONE count per (session, sf_dir, table) — a
-# metadata-scale parquet count action at index-BUILD time (exactly when
-# a real index builder sizes nlist). Memoized so the registry's many
-# per-query plan builds don't re-count; app-id-scoped like the training
-# memo so a recreated context re-counts.
-_COUNT_MEMO: dict[tuple, int] = {}
-
-
+# --- corpus count ----------------------------------------------------
 def corpus_count(spark, sf_dir: str, tbl: str = "embeddings") -> int:
+    """Row count of one input table, once per session: a metadata-scale
+    count at index-build time (when a real index builder sizes nlist),
+    memoized so the registry's many per-query plan builds don't
+    re-count."""
     from ..catalog import table as _table
+    from ..operators import memo
 
-    app = spark.sparkContext.applicationId
-    key = (app, sf_dir, tbl)
-    hit = _COUNT_MEMO.get(key)
-    if hit is not None:
-        return hit
-    for stale in [k for k in _COUNT_MEMO if k[0] != app]:
-        del _COUNT_MEMO[stale]
-    n = _table(spark, sf_dir, tbl).count()
-    _COUNT_MEMO[key] = n
-    return n
+    return memo.get(
+        spark,
+        ("corpus_count", sf_dir, tbl),
+        lambda: _table(spark, sf_dir, tbl).count(),
+    )
 
 
 # --- iterative-loop layout ----------------------------------------------

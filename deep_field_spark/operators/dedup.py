@@ -385,11 +385,3 @@ def simhash_pairs(df: DataFrame, text_col: str, id_col: str, max_hamming: int = 
         .filter(F.col("hamming") <= max_hamming)
         .select("id_a", "id_b", F.col("hamming").cast("int").alias("hamming"))
     )
-
-
-def dedup_keep_first(df: DataFrame, pair_df: DataFrame, id_col: str) -> DataFrame:
-    """Given near-dup pairs (id_a < id_b), drop every id_b (union-find
-    light: transitive chains collapse to the smallest id via iteration
-    in the caller if needed; single pass drops direct dups)."""
-    drops = pair_df.select(F.col("id_b").alias(id_col)).distinct()
-    return df.join(drops, on=id_col, how="left_anti")

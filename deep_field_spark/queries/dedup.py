@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 from ..catalog import table
 from ..functions import texting, vectors
 from ..operators import dedup as D
+from ..operators import memo
 from . import register
 from .text import TOKS_SQL
 
@@ -340,10 +341,6 @@ def _cos_pair_sql() -> str:
         ) + "))"
 
     return f"({dot}) / ({norm('a')} * {norm('b')})"
-
-
-def _emb_bucket_sql() -> str:
-    return _bucket_sql_for("embeddings")
 
 
 def _bucket_sql_for(tbl: str) -> str:
@@ -795,33 +792,15 @@ def dedup_dup_span_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- incremental near-dup: new batch vs corpus LSH state -------------
 
 
-# Session-scoped memo for the day-1 LSH base state (the corpus below
-# INCR_BATCH_MIN_ID, shingled/signed/banded at the module constants):
-# dedup_incremental_minhash, streaming_dedup_ingest and the bench's
-# lsh split all build this byte-identical artifact per run under
-# different names before ingesting against it (streaming's ingest
-# MUTATES its copy, so each consumer needs its own). The _memo_train
-# discipline applied to an on-disk artifact: the first consumer pays
-# the real build (visible in its bench build phase row), later
-# consumers lsh_state.clone it — a file-level copy of the same parquet
-# bytes, so results are identical by construction. Keyed on
-# applicationId: a fresh driver session always builds from scratch,
-# and the memo-owned source state is never mutated.
-_LSH_STATE_MEMO: dict[tuple, str] = {}
-
-
 def _memo_lsh_base(spark: SparkSession, sf_dir: str, dst: str) -> str:
+    """Clone the session's day-1 LSH base state (the corpus below
+    INCR_BATCH_MIN_ID at the module constants) to ``dst``; the first
+    caller pays the build. Consumers ingest into their own clone."""
     import hashlib
 
     from ..operators import lsh_state
 
-    app = spark.sparkContext.applicationId
-    key = (app, "lsh_base", sf_dir, NGRAM, NUM_HASHES, BANDS,
-           INCR_BATCH_MIN_ID)
-    src = _LSH_STATE_MEMO.get(key)
-    if src is None:
-        for stale in [k for k in _LSH_STATE_MEMO if k[0] != app]:
-            del _LSH_STATE_MEMO[stale]
+    def build() -> str:
         src = "lshmemo_" + hashlib.md5(sf_dir.encode()).hexdigest()[:8]
         lsh_state.build(
             table(spark, sf_dir, "documents").filter(
@@ -832,7 +811,10 @@ def _memo_lsh_base(spark: SparkSession, sf_dir: str, dst: str) -> str:
             num_hashes=NUM_HASHES,
             bands=BANDS,
         )
-        _LSH_STATE_MEMO[key] = src
+        return src
+
+    key = ("lsh_base", sf_dir, NGRAM, NUM_HASHES, BANDS, INCR_BATCH_MIN_ID)
+    src = memo.get(spark, key, build)
     lsh_state.clone(spark, src, dst)
     return dst
 

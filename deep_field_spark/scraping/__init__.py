@@ -7,5 +7,5 @@ Layout:
   cache       — HTML cache source/sink + fetch fallback chain (S1-S6, S10)
   pipeline    — DataFrame pipeline: parse UDFs, scalar transforms,
                 appearance windows, star-schema build (P*, F*, W*, J*)
-  sqlite_sink — SQLite DDL + batched foreachPartition writes (S7-S9)
+  sqlite_sink — SQLite DDL + batched driver-side writes (S7-S9)
 """

@@ -275,15 +275,3 @@ def parse_game(html: str) -> dict[str, Any]:
         }
     )
     return {"meta": meta, "rosters": rosters, "plays": plays}
-
-
-def game_player_suffixes(html: str) -> list[str]:
-    """Player-page URL suffixes referenced by a game page (its
-    dependency frontier, bbref_pages.py:155-159)."""
-    hidden = _hidden_tables(html)
-    batting = [h for h in hidden if "batting" in h]
-    out = []
-    for comment in batting[:2]:
-        for row in _roster_rows(parse_html(comment)):
-            out.append(row["suffix"])
-    return out

@@ -1,16 +1,14 @@
-"""SQLite sink: DDL + batched, transactional partition writes.
+"""SQLite sink: DDL + batched, transactional writes from the driver.
 
 Reference parity (db/models.py:14-60; bbref_pages.py:367-372,515,531-533):
   S7 DDL             the 5-table star schema, peewee-equivalent types
-  S8 batched insert  executemany in chunks (reference batches 100; we
-                     default 1000 — same shape, bigger batches)
-  S9 transactions    one transaction per partition; WAL + busy_timeout
-                     let the 32 local executor threads interleave
+  S8 batched insert  executemany over the table's rows
+  S9 transactions    one transaction per table, through one connection
 
 Scale note: SQLite is the reference-parity sink only — a single-file
-database is inherently single-writer. The analytics zone is parquet
-(write_star_parquet); on a cluster the same foreachPartition shape
-targets any DBAPI/JDBC warehouse with per-partition batching.
+database is inherently single-writer, so the rows stream to the driver
+(toLocalIterator, one partition at a time) and one connection writes
+them. The analytics zone is parquet (write_star_parquet).
 """
 
 from __future__ import annotations
@@ -18,6 +16,7 @@ from __future__ import annotations
 import sqlite3
 
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
 DDL = {
     "venue": """CREATE TABLE IF NOT EXISTS venue (
@@ -94,40 +93,25 @@ def drop_tables(db_path: str) -> None:
         con.close()
 
 
-def write_table(
-    df: DataFrame, db_path: str, table: str, batch_size: int = 1000
-) -> None:
-    """Batched insert via foreachPartition: one connection + one
-    transaction per partition (S9), executemany per batch (S8).
-    `desc` is a quoted identifier (SQL keyword)."""
+def write_table(df: DataFrame, db_path: str, table: str) -> None:
+    """INSERT OR REPLACE every row of ``df`` into ``table`` in one
+    transaction (S9), one executemany (S8). `desc` is a quoted
+    identifier (SQL keyword)."""
     cols = COLUMNS[table]
     col_sql = ", ".join(f'"{c}"' for c in cols)
     placeholders = ", ".join("?" for _ in cols)
     sql = f'INSERT OR REPLACE INTO {table} ({col_sql}) VALUES ({placeholders})'
-
-    def write_partition(rows) -> None:
-        con = _connect(db_path)
-        try:
-            batch = []
-            for row in rows:
-                batch.append(tuple(row[c] for c in cols))
-                if len(batch) >= batch_size:
-                    con.executemany(sql, batch)
-                    batch = []
-            if batch:
-                con.executemany(sql, batch)
-            con.commit()
-        finally:
-            con.close()
-
     # Dates → ISO strings for the DBAPI driver.
     out = df
     for c, t in df.dtypes:
         if t == "date":
-            from pyspark.sql import functions as F
-
             out = out.withColumn(c, F.date_format(F.col(c), "yyyy-MM-dd"))
-    out.select(*cols).foreachPartition(write_partition)
+    con = _connect(db_path)
+    try:
+        with con:
+            con.executemany(sql, out.select(*cols).toLocalIterator())
+    finally:
+        con.close()
 
 
 def write_star(star: dict[str, DataFrame], db_path: str) -> None:

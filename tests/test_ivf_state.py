@@ -477,9 +477,11 @@ def test_ivfpq_build_memo_is_session_scoped(spark, sf_dir, monkeypatch):
     must be a memo hit (no rebuild — production publishes one index to
     every serving surface), and the memo must never outlive its
     application id."""
+    from deep_field_spark.operators import memo
     from deep_field_spark.queries import similarity as S
 
-    S._IVFPQ_BUILT.clear()
+    key = (spark.sparkContext.applicationId, "ivfpq", sf_dir)
+    memo._ENTRIES.pop(key, None)
     name = S._ivfpq_build(spark, sf_dir)
     assert spark.catalog.tableExists(f"{name}_cells")
     monkeypatch.setattr(
@@ -488,12 +490,11 @@ def test_ivfpq_build_memo_is_session_scoped(spark, sf_dir, monkeypatch):
     )
     assert S._ivfpq_build(spark, sf_dir) == name
     # a stale entry from a dead app id is evicted, not served
-    S._IVFPQ_BUILT.clear()
-    S._IVFPQ_BUILT[("dead-app", sf_dir)] = name
+    del memo._ENTRIES[key]
+    memo._ENTRIES[("dead-app", "ivfpq", sf_dir)] = name
     with pytest.raises(AssertionError, match="rebuilt"):
         S._ivfpq_build(spark, sf_dir)
-    assert ("dead-app", sf_dir) not in S._IVFPQ_BUILT
-    S._IVFPQ_BUILT.clear()
+    assert ("dead-app", "ivfpq", sf_dir) not in memo._ENTRIES
 
 
 def test_hier_assign_build_and_search(spark, sf_dir, state_name):

@@ -94,13 +94,17 @@ def test_monotone_and_sqrt_tracking():
 
 
 def test_count_memo_is_session_scoped(spark, sf_dir):
-    SC._COUNT_MEMO.clear()
+    from deep_field_spark.operators import memo
+
+    key = (spark.sparkContext.applicationId, "corpus_count", sf_dir,
+           "embeddings")
+    memo._ENTRIES.pop(key, None)
     n1 = SC.corpus_count(spark, sf_dir, "embeddings")
     assert n1 > 0
-    key = next(iter(SC._COUNT_MEMO))
-    SC._COUNT_MEMO[key] = -7  # poison: a second call must be a memo hit
+    assert memo._ENTRIES[key] == n1
+    memo._ENTRIES[key] = -7  # poison: a second call must be a memo hit
     assert SC.corpus_count(spark, sf_dir, "embeddings") == -7
-    SC._COUNT_MEMO.clear()
+    del memo._ENTRIES[key]
     assert SC.corpus_count(spark, sf_dir, "embeddings") == n1
 
 

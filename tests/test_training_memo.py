@@ -8,10 +8,15 @@ import pytest
 from pyspark.sql import functions as F
 
 from deep_field_spark.catalog import spread, table
+from deep_field_spark.operators import memo
 from deep_field_spark.queries import load_registry
 from deep_field_spark.queries import similarity as S
 
 REGISTRY = load_registry()
+
+
+def _train_keys() -> set:
+    return {k for k in memo._ENTRIES if k[1] == "train"}
 
 
 @pytest.mark.slow
@@ -21,7 +26,8 @@ def test_warm_covers_every_training_family(spark, sf_dir):
     would silently reintroduce order-dependent bench timings. Proven
     by running the full consumer surface after the warm and asserting
     the memo gained no entries."""
-    S._TRAIN_MEMO.clear()
+    for k in _train_keys():
+        del memo._ENTRIES[k]
     rows = S.warm_training_memo(spark, sf_dir)
     assert set(rows) == {
         "train.lloyd_full", "train.lloyd_prefix", "train.lloyd_sem_aug",
@@ -29,7 +35,7 @@ def test_warm_covers_every_training_family(spark, sf_dir):
         "train.pq_raw", "train.pq_norm", "train.pq_norm_prefix",
         "train.cell_asg", "train.rcent", "train.pq_resid",
     }
-    warmed = set(S._TRAIN_MEMO)
+    warmed = _train_keys()
     consumers = [
         "ann_ivf_kmeans", "ann_ivf_recall", "ann_ivf_filtered",
         "ann_filtered_recall", "ann_ivfpq_recall", "ann_ivfpq_search",
@@ -40,9 +46,9 @@ def test_warm_covers_every_training_family(spark, sf_dir):
     ]
     for name in consumers:
         REGISTRY[name].fn(spark, sf_dir).count()
-        assert set(S._TRAIN_MEMO) == warmed, (
+        assert _train_keys() == warmed, (
             f"{name} trained a family warm_training_memo missed: "
-            f"{set(S._TRAIN_MEMO) - warmed}"
+            f"{_train_keys() - warmed}"
         )
 
 
